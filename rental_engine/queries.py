@@ -37,6 +37,10 @@ OPTIMIZATION_r16.md):
   * per-group count+median use the grouped binned rank search
     (_grouped_median): metadata aggregation + scan-prefiltered pull,
     never a full-data per-group sort window (guide §2.4/§2.5);
+  * the region rollups pre-aggregate lineitem by l_orderkey before
+    the dimension join (guide §2.3);
+  * the two broadcast memory caps read input bytes through one
+    fail-soft probe (_Ctx.table_bytes): no stat, no hint;
   * table handles are memoized per query invocation with explicit
     schemas — per-read datasource re-resolution measured ~110 ms of
     single-threaded driver time (guide §7.3).
@@ -109,24 +113,34 @@ class _Ctx:
             self._tables[name] = load(self.spark, self.sf_dir, name)
         return self._tables[name]
 
+    def table_bytes(self, *names: str) -> int | None:
+        """Summed on-disk bytes of the named tables (file or directory
+        of parts) for the broadcast memory caps (guide §3.1); None when
+        any path cannot be statted (e.g. a non-local sf_dir)."""
+        import os
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table (file or directory of parts) — a cheap,
-    scale-adaptive input for size-gated join hints (guide §3.1)."""
-    import os
-    p = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(p):
-        return sum(os.path.getsize(os.path.join(root, f))
-                   for root, _, files in os.walk(p) for f in files)
-    return os.path.getsize(p)
+        def fail(err: OSError) -> None:
+            raise err
+
+        try:
+            total = 0
+            for name in names:
+                p = f"{self.sf_dir}/{name}.parquet"
+                files = [p] if os.path.isfile(p) else [
+                    os.path.join(root, f)
+                    for root, _, fs in os.walk(p, onerror=fail) for f in fs]
+                total += sum(os.path.getsize(f) for f in files)
+            return total
+        except OSError:
+            return None
 
 
 QSCALE = 1_000_000  # 1e-6 quantum for floating sums/averages
 
 # broadcast the pre-joined dimension mapping only while its inputs'
 # on-disk bytes stay below this (comfortably inside executor memory
-# even at ~4x in-memory expansion); beyond it the planner picks a
-# shuffled join of the fact-sized sides
+# even at ~4x in-memory expansion); beyond it, or when the bytes are
+# unknown, the planner picks the join
 _DIM_BROADCAST_CAP = 64 << 20
 
 # broadcast the grouped-median pull-pass fact side only while its
@@ -137,11 +151,17 @@ _CAND_BROADCAST_ROWS = 2_000_000
 # task; such cells are resolved by the recursive rank search instead
 _GM_DENSE_CELL_ROWS = 4_000_000
 
+# grouped-median bins per e-fold: the metadata pass emits one row per
+# populated (group, bin), so this is coarser than _BIN_SCALE.  Bin
+# width changes only speed, never the answer (ties share a bin)
+_GM_BIN_SCALE = 64.0
+
 
 def _qsum(col: Column | str, scale: int = QSCALE) -> Column:
     """Order-independent exact sum: floor-quantize each double to an
-    integer, sum as BIGINT.  Valid while sum(|x|)*scale < 2^63 (ample
-    at the bench scale factors; production would widen to DECIMAL)."""
+    integer, sum as BIGINT.  Needs sum(|x|)*scale < 2^63 (ample at the
+    bench scale factors); past it ANSI mode raises ARITHMETIC_OVERFLOW
+    (production would widen to DECIMAL)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(F.floor(c * F.lit(float(scale))))
 
@@ -210,22 +230,6 @@ def _log_bin(col: str, depth: int, scale: float = _BIN_SCALE) -> Column:
             .cast("long")
 
 
-# Grouped-median bin granularity, derived from input size (scale-
-# adaptive, guide §2.2 spirit): bin count trades the metadata volume
-# (groups x populated bins — the LOCAL cost: measured 235k metadata
-# rows for district_stats at 512 bins/e-fold, and coarsening to 64
-# cut the query 3.5 s -> 2.8 s with identical results) against the
-# per-(group,bin) density that bounds the pull pass and its one-task
-# bin sorts (the AT-SCALE cost), so large inputs use the fine scale.
-_GM_BIN_SCALE_SMALL = 64.0
-_GM_FINE_BIN_BYTES = 1 << 30
-
-
-def _gm_bin_scale(sf_dir: str) -> float:
-    return (_BIN_SCALE if _table_bytes(sf_dir, "lineitem") >= _GM_FINE_BIN_BYTES
-            else _GM_BIN_SCALE_SMALL)
-
-
 def _exact_ranks(df: DataFrame, col: str, ks: list[int], n: int | None = None,
                  depth: int = 0) -> dict[int, float]:
     """Values at the given ascending 1-based global ranks of df[col]
@@ -265,7 +269,9 @@ def _rank_values(df: DataFrame, col: str, bin_expr: Column,
             targets.setdefault(b, []).append((ks_sorted[i], ks_sorted[i] - cum))
             i += 1
         cum += c
-    assert i == len(ks_sorted), "rank bookkeeping failed"
+    if i < len(ks_sorted):  # e.g. rank 0 of an empty input
+        raise ValueError(f"rank {ks_sorted[i]} out of range 1..{cum} "
+                         f"({cum} rows)")
 
     out: dict[int, float] = {}
     small = [b for b in targets if counts[b] <= _COLLECT_LIMIT]
@@ -358,8 +364,8 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
     rows through 2-4 successive joins (guide §8: move the heavy rows
     once; the round-15 shape shuffled/probed lineitem per dimension).
     nation/region are fixed-size (25/5 rows) => explicit broadcast;
-    orders/customer strategy is left to the planner (broadcast at
-    bench scale, SMJ/shuffled-hash at real scale)."""
+    the mapping is broadcast under _DIM_BROADCAST_CAP, else the planner
+    picks the join (SMJ/shuffled-hash at real scale)."""
     renames = {"city": F.col("n_name"), "region": F.col("r_name"),
                "district": F.col("c_mktsegment"), "adv_type": F.col("o_orderpriority")}
     dim = ctx.load("orders").select("o_orderkey", "o_custkey",
@@ -377,19 +383,17 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
     dim = dim.select("o_orderkey",
                      *[renames[alias].alias(alias) for alias in sorted(need)])
     # Catalyst's post-join size estimate for `dim` explodes, which made
-    # the planner broadcast the FACT side instead; gate a broadcast
-    # hint on the real input bytes (scale-adaptive: at real scale
-    # orders/customer exceed the cap and the planner chooses a
-    # shuffled join of the two fact-sized sides).  When the caller
-    # KNOWS the fact side is tiny (e.g. the grouped-median pull pass,
-    # whose exact row count comes from the metadata pass), broadcast
-    # that side instead and skip the dim hash-table build.
-    dim_bytes = _table_bytes(ctx.sf_dir, "orders")
-    if need & {"district", "city", "region"}:
-        dim_bytes += _table_bytes(ctx.sf_dir, "customer")
+    # the planner broadcast the FACT side instead; cap a broadcast
+    # hint on the real input bytes.  When the caller KNOWS the fact
+    # side is tiny (e.g. the grouped-median pull pass, whose exact row
+    # count comes from the metadata pass), broadcast that side instead
+    # and skip the dim hash-table build — measured: dropping this flip
+    # slowed district_stats 1.47 -> 1.64 s (sf0.1, 4 cores).
+    dim_bytes = ctx.table_bytes(
+        "orders", *(["customer"] if need & {"district", "city", "region"} else []))
     if small_fact:
         cleaned = F.broadcast(cleaned)
-    elif dim_bytes <= _DIM_BROADCAST_CAP:
+    elif dim_bytes is not None and dim_bytes <= _DIM_BROADCAST_CAP:
         dim = F.broadcast(dim)
     return cleaned.join(dim, cleaned.l_orderkey == dim.o_orderkey) \
                   .drop("o_orderkey")
@@ -514,11 +518,9 @@ def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
 
 def _binned_cleaned(ctx: _Ctx) -> DataFrame:
     """Cleaned lineitem with the price_per_unit log bin attached (the
-    cutoffs are resolved once here and shared by both median passes).
-    Bin granularity is input-size-adaptive (see _gm_bin_scale)."""
+    cutoffs are resolved once here and shared by both median passes)."""
     return (_cleaned_lineitem(ctx)
-            .withColumn("b", _log_bin("price_per_unit", 0,
-                                      _gm_bin_scale(ctx.sf_dir))))
+            .withColumn("b", _log_bin("price_per_unit", 0, _GM_BIN_SCALE)))
 
 
 def city_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,36 +585,20 @@ def advertiser_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _region_rollup(spark: SparkSession, sf_dir: str, value_col: str,
-                   out_name: str, pre_aggregate: bool | None = None) -> DataFrame:
+                   out_name: str) -> DataFrame:
     """Per-region (count, floor-quantized mean of ``value_col``).
 
-    Two exactly-equivalent shapes (pinned equal by
-    tests/test_internals.py::test_region_preagg_matches_direct):
-
-    * direct (small inputs): join the dimension mapping, then group —
-      the dim side broadcasts, so the fact rows never shuffle;
-    * pre-aggregated (scale-up; chosen when orders+customer exceed the
-      broadcast cap, so the dim join would shuffle the fact table):
-      aggregate lineitem by l_orderkey FIRST — count and the exact
-      integer partial sums — so only one row per order enters the
-      shuffled join (guide §2.3 "aggregate before you shuffle"); the
-      integer partials re-sum to the identical BIGINT total.
+    lineitem is aggregated by l_orderkey FIRST — count and the exact
+    integer partial sums — so only one row per order meets the
+    dimension mapping (guide §2.3 "aggregate before you shuffle"); the
+    integer partials re-sum to the identical BIGINT total of the
+    join-then-group formula (pinned by
+    tests/test_internals.py::test_region_preagg_matches_direct).
     """
     ctx = _Ctx(spark, sf_dir)
     cl = _cleaned_lineitem(ctx)
-    if pre_aggregate is None:
-        pre_aggregate = (_table_bytes(sf_dir, "orders")
-                         + _table_bytes(sf_dir, "customer")) > _DIM_BROADCAST_CAP
-    if not pre_aggregate:
-        full = _dims(ctx, cl, {"region"})
-        n = F.count(F.lit(1))
-        return (full.groupBy("region")
-                    .agg(n.alias("n_listings"),
-                         _qavg(value_col, n).alias(out_name)))
     pre = (cl.groupBy("l_orderkey")
-             .agg(F.count(F.lit(1)).alias("c"),
-                  F.sum(F.floor(F.col(value_col) * F.lit(float(QSCALE))))
-                   .alias("s")))
+             .agg(F.count(F.lit(1)).alias("c"), _qsum(value_col).alias("s")))
     j = _dims(ctx, pre, {"region"})
     n = F.sum("c")
     return (j.groupBy("region")
@@ -895,11 +881,12 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings is fact-sized: broadcast its reduced (vec_id, label,
     # norm) rows only while the real input bytes stay small (the
     # round-15 unconditional hint was a guaranteed OOM at scale —
-    # guide §3.1); past the cap the planner shuffles both sides.
-    # The broadcast side holds ~20 bytes/row where the input holds a
-    # 64-float vector (~270 bytes/row), so the input-bytes gate is
-    # scaled by a conservative 8x reduction factor.
-    if _table_bytes(sf_dir, "embeddings") <= 8 * _DIM_BROADCAST_CAP:
+    # guide §3.1); past the cap, or when the bytes are unknown, the
+    # planner picks the join.  The broadcast side holds ~20 bytes/row
+    # where the input holds a 64-float vector (~270 bytes/row), so the
+    # input-bytes cap is scaled by a conservative 8x reduction factor.
+    emb_bytes = ctx.table_bytes("embeddings")
+    if emb_bytes is not None and emb_bytes <= 8 * _DIM_BROADCAST_CAP:
         e = F.broadcast(e)
     j = d.join(e, d.doc_id == e.vec_id)
     n = F.count(F.lit(1))

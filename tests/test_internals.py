@@ -129,16 +129,55 @@ def test_grouped_median_dense_cell_path(spark, monkeypatch):
 
 
 def test_region_preagg_matches_direct(spark):
-    """The scale-up shape (pre-aggregate lineitem by l_orderkey before
-    the shuffled dim join) must be bit-identical to the direct shape."""
-    from rental_engine.queries import _region_rollup
+    """The region rollup (pre-aggregate lineitem by l_orderkey before
+    the dim join) must be bit-identical to the direct join-then-group
+    formula, kept here as the reference."""
+    from rental_engine.queries import (_Ctx, _cleaned_lineitem, _dims, _qavg,
+                                       _region_rollup)
     for sf in (SF_SMALL, SF_MED):
         for col, out in (("price", "avg_price"), ("price_per_unit", "avg_ppu")):
-            direct = sorted(map(tuple, _region_rollup(
-                spark, sf, col, out, pre_aggregate=False).collect()))
-            pre = sorted(map(tuple, _region_rollup(
-                spark, sf, col, out, pre_aggregate=True).collect()))
-            assert direct == pre, f"{sf} {col}"
+            ctx = _Ctx(spark, sf)
+            n = F.count(F.lit(1))
+            direct = (_dims(ctx, _cleaned_lineitem(ctx), {"region"})
+                      .groupBy("region")
+                      .agg(n.alias("n_listings"), _qavg(col, n).alias(out)))
+            pre = _region_rollup(spark, sf, col, out)
+            assert pre.columns == direct.columns
+            assert (sorted(map(tuple, direct.collect()))
+                    == sorted(map(tuple, pre.collect()))), f"{sf} {col}"
+
+
+def test_exact_quantiles_empty_input_raises_named_error(spark):
+    """An empty input has no rank to resolve: a ValueError naming the
+    rank and the row count, not a bare assertion (stripped by -O)."""
+    import pytest
+    from rental_engine.queries import _exact_quantiles
+    empty = spark.range(0).selectExpr("CAST(id AS DOUBLE) AS v")
+    with pytest.raises(ValueError, match=r"rank 0 out of range 1\.\.0 \(0 rows\)"):
+        _exact_quantiles(empty, "v", [(1, 20), (19, 20)])
+
+
+def test_size_probe_failure_keeps_results(spark, monkeypatch):
+    """A table whose size cannot be statted (e.g. a non-local sf_dir)
+    makes the size probe return None; the queries that consult it must
+    still build and return the same rows, only without broadcast
+    hints."""
+    import os
+
+    from rental_engine.queries import (_Ctx, cleaned_listings, multimodal_stats,
+                                       region_avg_price)
+    queries = (cleaned_listings, region_avg_price, multimodal_stats)
+    want = [sorted(map(tuple, q(spark, SF_SMALL).collect())) for q in queries]
+    assert _Ctx(spark, SF_SMALL).table_bytes("orders", "customer") > 0
+    assert _Ctx(spark, "/nonexistent/sf").table_bytes("embeddings") is None
+
+    def unstattable(path):
+        raise OSError(f"cannot stat {path}")
+
+    monkeypatch.setattr(os.path, "getsize", unstattable)
+    assert _Ctx(spark, SF_SMALL).table_bytes("orders") is None
+    got = [sorted(map(tuple, q(spark, SF_SMALL).collect())) for q in queries]
+    assert got == want
 
 
 def test_dedup_hash_groups_match_signature_groups(spark):
@@ -210,8 +249,9 @@ def test_hourly_two_level_distinct_null_semantics(spark):
 
 
 def test_qsum_overflow_headroom(spark):
-    """_qsum documents a sum(|x|)*1e6 < 2^63 validity limit (non-ANSI
-    BIGINT sums wrap silently past it).  Prove the headroom at the
+    """_qsum documents a sum(|x|)*1e6 < 2^63 validity limit (past it a
+    BIGINT sum fails the query with ARITHMETIC_OVERFLOW under Spark's
+    default ANSI mode).  Prove the headroom at the
     LARGEST bench scale factor for every quantized accumulation the
     queries perform, including the regression's qx*qy products."""
     li = load(spark, "/root/testdata/sf0.1", "lineitem")
@@ -224,7 +264,7 @@ def test_qsum_overflow_headroom(spark):
     ev = load(spark, "/root/testdata/sf0.1", "events").selectExpr(
         "SUM(ABS(CAST(floor(value * 1e6) AS BIGINT))) AS sv").collect()[0]
     for v in (r["sp"], r["sppu"], r["sxy"], ev["sv"]):
-        assert v < 2 ** 62, v  # >= 2x headroom below the wrap point
+        assert v < 2 ** 62, v  # >= 2x headroom below the overflow point
 
 
 def test_numpy_fold_matches_sql_fold(spark):

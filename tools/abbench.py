@@ -8,6 +8,11 @@ the noop sink and prints median/min/max.  Not part of the driver
 contract; bench.py remains the contract harness.
 
 Usage: python tools/abbench.py [reps] [query1,query2,...] [sf_dir]
+
+Like bench.py, it reads the core count from $SPARK_GRAFT_CPUS (default:
+all cores) and warms up on $SPARK_GRAFT_WARMUP_DIR, else on the sf0.001
+sibling of sf_dir; the warm-up is skipped when that directory is absent
+or is sf_dir itself.
 """
 
 from __future__ import annotations
@@ -29,16 +34,18 @@ def main() -> None:
     names = sys.argv[2].split(",") if len(sys.argv) > 2 and sys.argv[2] != "all" \
         else list(QUERIES)
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warmup idea as bench.py: one untimed pass per query at the
+    # same warmup as bench.py: one untimed pass per query at the
     # smallest SF so JIT/class-init is not charged to the first rep
-    warm_dir = "/root/testdata/sf0.001"
-    for name in names:
-        QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+    warm_dir = os.environ.get("SPARK_GRAFT_WARMUP_DIR",
+                              os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001"))
+    if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) != os.path.realpath(sf_dir):
+        for name in names:
+            QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
 
     out = {}
     for name in names:
