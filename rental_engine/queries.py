@@ -22,9 +22,10 @@ Determinism contract (so the oracle value-hash matches bit-for-bit):
 
 Optimization notes (rounds 15-16; see OPTIMIZATION_r15.md /
 OPTIMIZATION_r16.md):
-  * the price-band cutoffs use an exact binned rank search (two
-    light, fully parallel aggregation jobs) instead of a
-    single-partition global sort (guide §2.4/§2.5);
+  * the price-band cutoffs use an exact binned rank search (a bin
+    count, the pure-Python rank locator _locate, a pull of the target
+    bins only) instead of a single-partition global sort (guide
+    §2.4/§2.5);
   * string/vector kernels (dedup signature digests, kNN cosines,
     norms) run vectorized in numpy via mapInArrow (guide §4.2) —
     Catalyst evaluates higher-order functions and array expressions
@@ -34,9 +35,10 @@ OPTIMIZATION_r16.md):
     |lineitem| at every sf), so queries whose output needs no
     dimension column skip the join entirely, and the others join one
     pre-joined pruned dimension mapping (guide §1.2/§2.3/§8);
-  * per-group count+median use the grouped binned rank search
-    (_grouped_median): metadata aggregation + scan-prefiltered pull,
-    never a full-data per-group sort window (guide §2.4/§2.5);
+  * per-group count+median use the same search grouped
+    (_grouped_median): (group, bin) counts pulled via Arrow, _locate
+    per group, then a scan-prefiltered pull — never a full-data
+    per-group sort window (guide §2.4/§2.5);
   * the region rollups pre-aggregate lineitem by l_orderkey before
     the dimension join (guide §2.3);
   * the two broadcast memory caps read input bytes through one
@@ -147,10 +149,6 @@ _DIM_BROADCAST_CAP = 64 << 20
 # EXACT row count (known from the metadata pass) stays small
 _CAND_BROADCAST_ROWS = 2_000_000
 
-# a grouped-median (group, bin) cell above this sorts too much in one
-# task; such cells are resolved by the recursive rank search instead
-_GM_DENSE_CELL_ROWS = 4_000_000
-
 # grouped-median bins per e-fold: the metadata pass emits one row per
 # populated (group, bin), so this is coarser than _BIN_SCALE.  Bin
 # width changes only speed, never the answer (ties share a bin)
@@ -213,70 +211,60 @@ def _price() -> Column:
     return F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
 
 _BIN_SCALE = 512.0        # ~512 bins per e-fold of value; no min/max pass needed
-_REFINE = 4096.0          # per recursion level, split each bin ~4096 ways
 _COLLECT_LIMIT = 32768    # rows we are willing to pull for the final sort
-_MAX_DEPTH = 3
 
 
-def _log_bin(col: str, depth: int, scale: float = _BIN_SCALE) -> Column:
+def _log_bin(col: str, scale: float = _BIN_SCALE) -> Column:
     """Absolute log-scale bin index for a POSITIVE double column.
 
     Monotonic in the value and needs no data bounds, so the bin-count
     pass is the first pass.  Only Spark evaluates it (re-evaluated
     identically when filtering), so cross-engine rounding of ln() is
-    irrelevant.  Deeper levels refine each bin ~4096x.
+    irrelevant.  NULL and non-positive values land in the NULL bin,
+    which ``_locate`` rejects.
     """
-    return F.floor(F.log(F.col(col)) * F.lit(scale * _REFINE ** depth)) \
-            .cast("long")
+    return F.floor(F.log(F.col(col)) * F.lit(scale)).cast("long")
 
 
-def _exact_ranks(df: DataFrame, col: str, ks: list[int], n: int | None = None,
-                 depth: int = 0) -> dict[int, float]:
-    """Values at the given ascending 1-based global ranks of df[col]
-    (col must be > 0).
+def _locate(counts: dict, ks: list[int]) -> dict[int, tuple[int, int]]:
+    """Map each 1-based rank in ``ks`` to ``(bin, rank within bin)`` by
+    walking the per-bin ``counts`` in value order.  Pure Python: the
+    counts are already on the driver, so this issues no Spark job.
 
-    Exact discrete quantiles WITHOUT a global sort (guide §2.4/§2.5):
-    one log-bin counting pass narrows each rank to one bin (a few
-    thousand rows of metadata to the driver), one filter pass pulls
-    only the target bins' values.  Pathologically dense bins recurse
-    with a finer bin scale.  ``n`` (total rows) is validated against
-    the bin counts when given; callers that need n first should use
-    ``_exact_quantiles``.
+    The NULL bin (NULL or non-positive values) has no single rank
+    position that matches the oracle's ORDER BY — NULLs sort last,
+    negatives first — so it is an error rather than a guess.
     """
-    bin_expr = _log_bin(col, depth)
-    counts = dict(df.groupBy(bin_expr.alias("b")).count().collect())
     if None in counts:
-        raise ValueError("_exact_ranks requires a positive column")
+        raise ValueError("log-bin rank search needs positive, non-NULL values")
     total = sum(counts.values())
-    if n is not None and n != total:
-        raise RuntimeError(f"row count drifted: {n} != {total}")
     for k in ks:
         if not 1 <= k <= total:
-            raise ValueError(f"rank {k} out of range 1..{total}")
-    return _rank_values(df, col, bin_expr, counts, sorted(set(ks)), depth)
-
-
-def _rank_values(df: DataFrame, col: str, bin_expr: Column,
-                 counts: dict[int, int], ks_sorted: list[int],
-                 depth: int) -> dict[int, float]:
-    """Resolve sorted ranks against precomputed bin counts."""
-    targets: dict[int, list[tuple[int, int]]] = {}
+            raise ValueError(f"rank {k} out of range 1..{total} ({total} rows)")
+    pending = sorted(set(ks))
+    out: dict[int, tuple[int, int]] = {}
     cum = 0
-    i = 0
     for b in sorted(counts):
-        c = counts[b]
-        while i < len(ks_sorted) and ks_sorted[i] <= cum + c:
-            targets.setdefault(b, []).append((ks_sorted[i], ks_sorted[i] - cum))
-            i += 1
-        cum += c
-    if i < len(ks_sorted):  # e.g. rank 0 of an empty input
-        raise ValueError(f"rank {ks_sorted[i]} out of range 1..{cum} "
-                         f"({cum} rows)")
+        while pending and pending[0] <= cum + counts[b]:
+            k = pending.pop(0)
+            out[k] = (b, k - cum)
+        cum += counts[b]
+    return out
 
-    out: dict[int, float] = {}
-    small = [b for b in targets if counts[b] <= _COLLECT_LIMIT]
+
+def _rank_values(df: DataFrame, col: str, bin_expr: Column, counts: dict[int, int],
+                 located: dict[int, tuple[int, int]]) -> dict[int, float]:
+    """Values at the ranks ``_locate`` placed in bins.  One job pulls
+    the target bins of at most _COLLECT_LIMIT rows to sort on the
+    driver; one job ranks all larger target bins on the cluster with a
+    per-bin spilling sort, memory-safe at any bin size and rank."""
+    wanted: dict[int, set[int]] = {}
+    for b, r in located.values():
+        wanted.setdefault(b, set()).add(r)
+    small = [b for b in wanted if counts[b] <= _COLLECT_LIMIT]
+    big = [b for b in wanted if counts[b] > _COLLECT_LIMIT]
+    got: dict[tuple[int, int], float] = {}
     if small:
-        # one job pulls every resolvable bin's values
         rows = (df.where(bin_expr.isin(small))
                   .select(bin_expr.alias("b"), F.col(col).alias("v")).collect())
         by_bin: dict[int, list[float]] = {}
@@ -286,45 +274,31 @@ def _rank_values(df: DataFrame, col: str, bin_expr: Column,
             vals = sorted(by_bin[b])
             if len(vals) != counts[b]:
                 raise RuntimeError("bin re-evaluation mismatch")
-            for k, r in targets[b]:
-                out[k] = vals[r - 1]
-    for b in targets:
-        if b in small:
-            continue
-        sub = df.where(bin_expr == b)
-        if depth >= _MAX_DEPTH:
-            # a bin still oversized after maximal refinement holds
-            # near-identical values; resolve its ranks on the CLUSTER
-            # with an external (spilling) single-partition sort +
-            # row_number — memory-safe at any bin size and any rank,
-            # unlike offset+limit (a size-(offset+limit) priority
-            # queue) or collecting the bin whole
-            rs_bin = [r for _, r in targets[b]]
-            rows = (sub.select(F.col(col).alias("v"))
-                       .withColumn("rn", F.row_number().over(Window.orderBy("v")))
-                       .where(F.col("rn").isin(rs_bin))
-                       .collect())
-            got_bin = {r["rn"]: r["v"] for r in rows}
-            for k, r in targets[b]:
-                out[k] = got_bin[r]
-            continue
-        rs = [r for _, r in targets[b]]
-        got = _exact_ranks(sub, col, rs, counts[b], depth + 1)
-        for k, r in targets[b]:
-            out[k] = got[r]
-    return out
+            for r in wanted[b]:
+                got[b, r] = vals[r - 1]
+    if big:
+        rns = sorted(set().union(*(wanted[b] for b in big)))
+        rows = (df.where(bin_expr.isin(big))
+                  .select(bin_expr.alias("b"), F.col(col).alias("v"))
+                  .withColumn("rn", F.row_number().over(
+                      Window.partitionBy("b").orderBy("v")))
+                  .where(F.col("rn").isin(rns)).collect())
+        for r in rows:
+            got[r["b"], r["rn"]] = r["v"]
+    return {k: got[loc] for k, loc in located.items()}
 
 
 def _exact_quantiles(df: DataFrame, col: str, qs: list[tuple[int, int]]) -> list[float]:
-    """Values at the discrete quantiles ceil(num*n/den): the bin-count
-    pass already yields n, so no separate count job is needed."""
-    bin_expr = _log_bin(col, 0)
+    """Values at the discrete quantiles ceil(num*n/den) of df[col]
+    WITHOUT a global sort (guide §2.4/§2.5): one log-bin counting pass
+    (a few thousand rows of metadata to the driver) yields n and places
+    each rank in one bin; ``_rank_values`` then pulls only the target
+    bins."""
+    bin_expr = _log_bin(col)
     counts = dict(df.groupBy(bin_expr.alias("b")).count().collect())
-    if None in counts:
-        raise ValueError("_exact_quantiles requires a positive column")
     n = sum(counts.values())
     ks = [(num * n + den - 1) // den for num, den in qs]  # ceil in integers
-    got = _rank_values(df, col, bin_expr, counts, sorted(set(ks)), depth=0)
+    got = _rank_values(df, col, bin_expr, counts, _locate(counts, ks))
     return [got[k] for k in ks]
 
 
@@ -419,69 +393,54 @@ def cleaned_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
                     attach) -> DataFrame:
     """Per-group (count, discrete median of price_per_unit) via a
-    grouped binned rank search (guide §2.4/§2.5).
-
-    The round-15 shape shuffled the ENTIRE fact table into one
-    partition per group (25 cities / ~125 districts) and sorted each
-    group in full — a hard parallelism ceiling at any scale (the 8->32
-    core ratio measured ~1.0).  Instead, the grouped analogue of
-    ``_exact_ranks``:
+    grouped binned rank search (guide §2.4/§2.5), instead of the
+    round-15 full sort of each group in one partition (a hard
+    parallelism ceiling: the 8->32 core ratio measured ~1.0).
 
     1. metadata pass: ``groupBy(keys, log_bin(ppu))`` counts — partial
-       (map-side) aggregation shuffles only (group x bin) metadata;
-       tiny windows over that metadata find, per group, the bin
-       containing the median rank ``(total+1) DIV 2`` and the rank
-       offset within it; ONE row per group is collected (bounded by
-       the query's own output size, like the cutoff scalars);
+       aggregation shuffles only (group x bin) metadata, pulled via
+       Arrow (at most |groups| x populated bins rows, set by the bin
+       range, not the row count); ``_locate`` finds each group's bin
+       holding the median rank ``(n + 1) DIV 2`` and the offset in it;
     2. pull pass: ``binned`` is re-read filtered to the union of
-       target bins AT THE SCAN (before any dimension join — only
-       ~|groups| bins x ~bin-density rows survive, so the join and the
-       per-group sort run on a few thousand rows), then joined to the
-       local one-row-per-group target table.
+       target bins AT THE SCAN (before any dimension join, so the join
+       and the per-group sort see ~|groups| bins of rows), joined to
+       the local one-row-per-group target table, and ranked by a
+       per-group row_number — a spilling sort, exact for a target cell
+       of any size.
 
     ``binned`` must carry ``price_per_unit`` and its log bin ``b``;
     ``attach(df)`` adds the group-key columns (dimension joins) and is
     called once per pass.  Ties cannot straddle a bin (equal values
     share a bin), so the selected VALUE equals the row_number
-    formulation's.  price_per_unit > 0 by construction (price >= lo >
-    0, l_quantity > 0), so the log bin is never null.  A (group, bin)
-    cell above _GM_DENSE_CELL_ROWS (which would otherwise sort in one
-    task — the grouped analogue of the skew a single enormous key
-    causes, guide §2.5) is excluded from the pull join and resolved by
-    the fully parallel recursive rank search on that cell alone.
+    formulation's.  A NULL or non-positive price_per_unit (e.g. a zero
+    or negative l_quantity) lands in the NULL bin and raises
+    ``_locate``'s ValueError instead of giving a wrong median.
     """
     full = attach(binned).select(*keys, "price_per_unit", "b")
-    meta = full.groupBy(*keys, "b").agg(F.count(F.lit(1)).alias("c"))
-    w_cum = (Window.partitionBy(*keys).orderBy("b")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    rank = F.expr("(total + 1) DIV 2")
-    all_rows = (meta.withColumn("cum", F.sum("c").over(w_cum))
-                    .withColumn("total", F.sum("c").over(Window.partitionBy(*keys)))
-                    .withColumn("bin_total",
-                                F.sum("c").over(Window.partitionBy("b")))
-                    .where((F.col("cum") - F.col("c") < rank) & (rank <= F.col("cum")))
-                    .select(*keys, F.col("b").alias("tb"),
-                            (rank - F.col("cum") + F.col("c")).alias("rk"),
-                            F.col("total").alias("n_listings"), "c", "bin_total")
-                    .collect())
-    tgt_rows = [r for r in all_rows if r["c"] <= _GM_DENSE_CELL_ROWS]
-    dense_rows = [r for r in all_rows if r["c"] > _GM_DENSE_CELL_ROWS]
-    bins = sorted({r["tb"] for r in tgt_rows})
+    meta = full.groupBy(*keys, "b").count().toArrow()
+    cells: dict[tuple, dict[int, int]] = {}
+    bin_total: dict[int, int] = {}
+    for *g, b, c in zip(*(arr.to_pylist() for arr in meta.columns)):
+        cells.setdefault(tuple(g), {})[b] = c
+        bin_total[b] = bin_total.get(b, 0) + c
+    tgt_rows = []
+    for g, counts in cells.items():
+        n = sum(counts.values())
+        ((tb, rk),) = _locate(counts, [(n + 1) // 2]).values()
+        tgt_rows.append(g + (tb, rk, n))
+    bins = sorted({r[len(keys)] for r in tgt_rows})
     # exact pull-pass row count, known from the metadata: the scan
     # filter keeps every row whose bin is in the UNION of target bins
     # (across ALL groups), so sum each distinct bin's GLOBAL count —
     # when small, the pull join broadcasts the filtered fact side
     # instead of rebuilding the dimension hash table for a few probes
-    n_cand = sum({r["tb"]: r["bin_total"] for r in tgt_rows}.values())
-    key_fields = [full.schema[k] for k in keys]
+    n_cand = sum(bin_total[b] for b in bins)
     from pyspark.sql import types as T
     tgt_schema = T.StructType(
-        [T.StructField(f"__{f.name}", f.dataType) for f in key_fields]
-        + [T.StructField("tb", T.LongType()),
-           T.StructField("rk", T.LongType()),
-           T.StructField("n_listings", T.LongType())])
-    tgt = ctx.spark.createDataFrame(
-        [tuple(r)[: len(keys) + 3] for r in tgt_rows], tgt_schema)
+        [T.StructField(f"__{k}", full.schema[k].dataType) for k in keys]
+        + [T.StructField(c, T.LongType()) for c in ("tb", "rk", "n_listings")])
+    tgt = ctx.spark.createDataFrame(tgt_rows, tgt_schema)
 
     cand = attach(binned.where(F.col("b").isin(bins)),
                   small_fact=n_cand <= _CAND_BROADCAST_ROWS) \
@@ -489,38 +448,18 @@ def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
     cond = [cand[k] == tgt[f"__{k}"] for k in keys]
     cond.append(cand["b"] == tgt["tb"])
     w_rank = Window.partitionBy(*keys).orderBy("price_per_unit")
-    out = (cand.join(F.broadcast(tgt), cond)
-               .withColumn("rn", F.row_number().over(w_rank))
-               .where(F.col("rn") == F.col("rk"))
-               .select(*keys, "n_listings",
-                       F.col("price_per_unit").alias("median_ppu")))
-    if dense_rows:
-        # pathological cells: resolve each group's in-cell rank with
-        # the recursive binned rank search (parallel aggregation
-        # passes over just that cell — no single-task sort, bounded
-        # driver memory), then append the locally built rows
-        local = []
-        for r in dense_rows:
-            cell = attach(binned.where(F.col("b") == r["tb"]))
-            for k in keys:
-                cell = cell.where(F.col(k) == r[k])
-            got = _exact_ranks(cell.select("price_per_unit"),
-                               "price_per_unit", [r["rk"]], r["c"], depth=1)
-            local.append(tuple(r[k] for k in keys)
-                         + (r["n_listings"], got[r["rk"]]))
-        dense_schema = T.StructType(
-            [T.StructField(k, full.schema[k].dataType) for k in keys]
-            + [T.StructField("n_listings", T.LongType()),
-               T.StructField("median_ppu", T.DoubleType())])
-        out = out.unionByName(ctx.spark.createDataFrame(local, dense_schema))
-    return out
+    return (cand.join(F.broadcast(tgt), cond)
+                .withColumn("rn", F.row_number().over(w_rank))
+                .where(F.col("rn") == F.col("rk"))
+                .select(*keys, "n_listings",
+                        F.col("price_per_unit").alias("median_ppu")))
 
 
 def _binned_cleaned(ctx: _Ctx) -> DataFrame:
     """Cleaned lineitem with the price_per_unit log bin attached (the
     cutoffs are resolved once here and shared by both median passes)."""
     return (_cleaned_lineitem(ctx)
-            .withColumn("b", _log_bin("price_per_unit", 0, _GM_BIN_SCALE)))
+            .withColumn("b", _log_bin("price_per_unit", _GM_BIN_SCALE)))
 
 
 def city_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,7 +3,8 @@
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from rental_engine.queries import _exact_ranks, _price, _price_cutoffs, load
+from rental_engine.queries import (_exact_quantiles, _locate, _price,
+                                   _price_cutoffs, load)
 from tests.conftest import SF_MED, SF_SMALL
 
 
@@ -13,12 +14,47 @@ def naive_rank_values(df, col, ks):
     return {r["rn"]: r[col] for r in rows}
 
 
+def exact_ranks(df, col, ks, n):
+    """Values at the 1-based ranks ``ks`` of df[col] (n rows), through
+    the cutoff search: the quantile k/n resolves to rank ceil(k*n/n) = k."""
+    return dict(zip(ks, _exact_quantiles(df, col, [(k, n) for k in ks])))
+
+
+def job_count(spark, group, fn):
+    """Run fn() under its own job group; return (result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_locate_walks_counts_without_spark():
+    """The rank locator is pure Python: bin boundaries, duplicate ranks
+    and its two named errors, with no Spark session."""
+    import pytest
+    counts = {7: 3, -2: 2, 40: 1}          # value order: -2, 7, 40
+    assert _locate(counts, [2, 3, 5, 6]) == {
+        2: (-2, 2),                         # last row of a bin (k == cum)
+        3: (7, 1),                          # first row of the next bin
+        5: (7, 3), 6: (40, 1)}
+    assert _locate(counts, [4, 4, 1]) == {4: (7, 2), 1: (-2, 1)}
+    with pytest.raises(ValueError, match="positive, non-NULL"):
+        _locate({None: 1, 3: 2}, [1])
+    with pytest.raises(ValueError, match=r"rank 1 out of range 1\.\.0 \(0 rows\)"):
+        _locate({}, [1])
+    with pytest.raises(ValueError, match=r"rank 7 out of range 1\.\.6 \(6 rows\)"):
+        _locate(counts, [7])
+
+
 def test_exact_ranks_matches_global_sort(spark):
     for sf in (SF_SMALL, SF_MED):
         li = load(spark, sf, "lineitem").select(_price().alias("price"))
         n = li.count()
         ks = sorted({1, 2, (n + 19) // 20, n // 2, (19 * n + 19) // 20, n})
-        got = _exact_ranks(li, "price", ks, n)
+        got = exact_ranks(li, "price", ks, n)
         want = naive_rank_values(li, "price", ks)
         assert got == want, f"{sf}: {got} != {want}"
 
@@ -47,24 +83,42 @@ def test_declared_schemas_match_footers(spark):
 
 
 def test_exact_ranks_constant_column(spark):
-    """All-equal values put every rank in one bin; the dense-bin path
-    (recursion bottoms out, then collects) must still be exact."""
+    """All-equal values put every rank in one bin above the collect
+    limit; the per-bin sort on the cluster must still be exact."""
     df = spark.range(40000).selectExpr("CAST(7.5 AS DOUBLE) AS v")
-    got = _exact_ranks(df, "v", [1, 20000, 40000], 40000)
+    got = exact_ranks(df, "v", [1, 20000, 40000], 40000)
     assert got == {1: 7.5, 20000: 7.5, 40000: 7.5}
 
 
-def test_exact_ranks_dense_bin_recursion(spark):
-    """More rows than the collect limit inside one coarse bin forces
-    the finer-scale recursion; values designed to stay in one depth-0
-    log bin (all within a factor of 1/512 in log space)."""
-    # spread 5e-5 in ln-space => a single depth-0 bin of 50000 rows
-    # (> _COLLECT_LIMIT), so the finer scale must kick in
+def test_exact_ranks_dense_bin(spark):
+    """More rows than the collect limit inside one bin: values designed
+    to stay in one log bin (all within a factor of 1/512 in log
+    space) are ranked by the per-bin sort on the cluster."""
+    # spread 5e-5 in ln-space => a single bin of 50000 rows
+    # (> _COLLECT_LIMIT)
     df = spark.range(50000).selectExpr("1000.0 + id * 1e-6 AS v")
     ks = [1, 25000, 50000]
-    got = _exact_ranks(df, "v", ks, 50000)
+    got = exact_ranks(df, "v", ks, 50000)
     want = {1: 1000.0, 25000: 1000.0 + 24999 * 1e-6, 50000: 1000.0 + 49999 * 1e-6}
     assert got == want
+
+
+def test_oversized_bins_resolve_in_one_job(spark):
+    """Three tight clusters of 40000 rows (near 10, 100 and 1000) each
+    fill one log bin above the collect limit; ranks in all three bins
+    are sorted together, so three bins run no more jobs than one."""
+    df = spark.range(120000).selectExpr(
+        "CASE id DIV 40000 WHEN 0 THEN 10D WHEN 1 THEN 100D ELSE 1000D END"
+        " + (id % 40000) * 1e-9 AS v")
+    one, one_jobs = job_count(
+        spark, "oversized-one", lambda: _exact_quantiles(df, "v", [(1, 6)]))
+    three, three_jobs = job_count(
+        spark, "oversized-three",
+        lambda: _exact_quantiles(df, "v", [(1, 6), (3, 6), (5, 6)]))
+    assert one == [10.0 + 19999 * 1e-9]
+    assert three == [10.0 + 19999 * 1e-9, 100.0 + 19999 * 1e-9,
+                     1000.0 + 19999 * 1e-9]
+    assert 0 < three_jobs <= one_jobs, (three_jobs, one_jobs)
 
 
 def naive_median_counts(df, keys):
@@ -101,7 +155,7 @@ def test_grouped_median_matches_window(spark):
         [("a", 1.0), ("a", 1.0), ("a", 2.0), ("a", 7.5),       # even, tie at median
          ("b", 3.0),                                            # singleton
          ("c", 5.0), ("c", 5.0), ("c", 5.0), ("c", 9.0), ("c", 0.5)],
-        ["g", "price_per_unit"]).withColumn("b", _log_bin("price_per_unit", 0))
+        ["g", "price_per_unit"]).withColumn("b", _log_bin("price_per_unit"))
     got = sorted(map(tuple, _grouped_median(
         _Ctx(spark, SF_SMALL), syn, ["g"],
         lambda df, small_fact=False: df).collect()))
@@ -109,23 +163,58 @@ def test_grouped_median_matches_window(spark):
     assert got == want and got == [("a", 4, 1.0), ("b", 1, 3.0), ("c", 5, 5.0)]
 
 
-def test_grouped_median_dense_cell_path(spark, monkeypatch):
-    """A (group, bin) cell above _GM_DENSE_CELL_ROWS must be resolved
-    by the recursive rank search and still give the window answer."""
-    import rental_engine.queries as Q
+def test_grouped_median_dense_cell_path(spark):
+    """A (group, bin) cell holding a whole group is ranked by the pull
+    pass's per-group sort and gives the window answer; three such
+    cells run no more jobs than one."""
     from rental_engine.queries import _Ctx, _grouped_median, _log_bin
+
+    def median(syn, group):
+        return job_count(spark, group, lambda: sorted(map(tuple, _grouped_median(
+            _Ctx(spark, SF_SMALL), syn, ["g"],
+            lambda df, small_fact=False: df).collect())))
+
     syn = (spark.range(3001)
            .selectExpr("CASE WHEN id < 3000 THEN 'dense' ELSE 'tiny' END AS g",
                        "CASE WHEN id < 3000 THEN 5.0 + (id % 3) * 1e-9 "
                        "ELSE 42.0 END AS price_per_unit")
-           .withColumn("b", _log_bin("price_per_unit", 0)))
-    monkeypatch.setattr(Q, "_GM_DENSE_CELL_ROWS", 1000)
-    got = sorted(map(tuple, _grouped_median(
-        _Ctx(spark, SF_SMALL), syn, ["g"],
-        lambda df, small_fact=False: df).collect()))
+           .withColumn("b", _log_bin("price_per_unit")))
+    got, one_jobs = median(syn, "dense-one")
     want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
     assert got == want
     assert got == [("dense", 3000, 5.0 + 1e-9), ("tiny", 1, 42.0)]
+
+    syn3 = (spark.range(9001)
+            .selectExpr("CASE WHEN id < 9000 THEN concat('dense', id DIV 3000) "
+                        "ELSE 'tiny' END AS g",
+                        "CASE WHEN id < 9000 THEN 5.0 * (1 + id DIV 3000) "
+                        "+ (id % 3) * 1e-9 ELSE 42.0 END AS price_per_unit")
+            .withColumn("b", _log_bin("price_per_unit")))
+    got3, three_jobs = median(syn3, "dense-three")
+    want3 = sorted(map(tuple, naive_median_counts(syn3, ["g"]).collect()))
+    assert got3 == want3
+    assert got3 == [("dense0", 3000, 5.0 + 1e-9), ("dense1", 3000, 10.0 + 1e-9),
+                    ("dense2", 3000, 15.0 + 1e-9), ("tiny", 1, 42.0)]
+    assert 0 < three_jobs <= one_jobs, (three_jobs, one_jobs)
+
+
+def test_grouped_median_null_bin_raises_named_error(spark):
+    """A NULL or non-positive price_per_unit falls in the NULL log bin,
+    where no single rank position matches the oracle's ORDER BY (NULLs
+    last, negatives first): a named ValueError, not a wrong median, an
+    empty answer or a TypeError."""
+    import pytest
+    from rental_engine.queries import _Ctx, _grouped_median, _log_bin
+    cases = [[("a", None), ("a", 1.0), ("a", 2.0)],
+             [("a", -1.0), ("a", -2.0), ("a", 3.0)],
+             [("a", -1.0), ("a", -2.0), ("a", 3.0), ("b", 2.0)],
+             [("a", -1.0), ("a", 3.0), ("a", 4.0)]]
+    for rows in cases:
+        syn = (spark.createDataFrame(rows, "g string, price_per_unit double")
+               .withColumn("b", _log_bin("price_per_unit")))
+        with pytest.raises(ValueError, match="positive, non-NULL"):
+            _grouped_median(_Ctx(spark, SF_SMALL), syn, ["g"],
+                            lambda df, small_fact=False: df).collect()
 
 
 def test_region_preagg_matches_direct(spark):
