@@ -36,9 +36,11 @@ OPTIMIZATION_r16.md):
     dimension column skip the join entirely, and the others join one
     pre-joined pruned dimension mapping (guide §1.2/§2.3/§8);
   * per-group count+median use the same search grouped
-    (_grouped_median): (group, bin) counts pulled via Arrow, _locate
-    per group, then a scan-prefiltered pull — never a full-data
-    per-group sort window (guide §2.4/§2.5);
+    (_grouped_median): (group, bin) counts pulled via Arrow, the top 20
+    cities chosen on the driver from those counts, _locate per kept
+    group, then a scan-prefiltered pull — never a full-data per-group
+    sort window and no rank window over the aggregated groups (guide
+    §2.4/§2.5);
   * the region rollups pre-aggregate lineitem by l_orderkey before
     the dimension join (guide §2.3);
   * the two broadcast memory caps read input bytes through one
@@ -148,6 +150,10 @@ _DIM_BROADCAST_CAP = 64 << 20
 # broadcast the grouped-median pull-pass fact side only while its
 # EXACT row count (known from the metadata pass) stays small
 _CAND_BROADCAST_ROWS = 2_000_000
+
+# both median queries report only the cities with the most cleaned
+# listings (reference test.py; the oracle's _TOP_CITIES)
+_TOP_CITIES = 20
 
 # grouped-median bins per e-fold: the metadata pass emits one row per
 # populated (group, bin), so this is coarser than _BIN_SCALE.  Bin
@@ -390,9 +396,9 @@ def cleaned_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
-                    attach) -> DataFrame:
-    """Per-group (count, discrete median of price_per_unit) via a
+def _grouped_median(ctx: _Ctx, cleaned: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-group (count, discrete median of price_per_unit) for the
+    groups of the _TOP_CITIES cities with the most listings, via a
     grouped binned rank search (guide §2.4/§2.5), instead of the
     round-15 full sort of each group in one partition (a hard
     parallelism ceiling: the 8->32 core ratio measured ~1.0).
@@ -400,35 +406,44 @@ def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
     1. metadata pass: ``groupBy(keys, log_bin(ppu))`` counts — partial
        aggregation shuffles only (group x bin) metadata, pulled via
        Arrow (at most |groups| x populated bins rows, set by the bin
-       range, not the row count); ``_locate`` finds each group's bin
-       holding the median rank ``(n + 1) DIV 2`` and the offset in it;
-    2. pull pass: ``binned`` is re-read filtered to the union of
+       range, not the row count).  A city's total is the exact integer
+       sum of its group counts; the top cities are taken in the
+       oracle's ``ORDER BY n_listings DESC, city`` order (NULLs last),
+       and a NULL city among them is dropped, as the oracle's equality
+       join drops it.  ``_locate`` finds each kept group's bin holding
+       the median rank ``(n + 1) DIV 2`` and the offset in it;
+    2. pull pass: ``cleaned`` is re-read filtered to the union of
        target bins AT THE SCAN (before any dimension join, so the join
        and the per-group sort see ~|groups| bins of rows), joined to
        the local one-row-per-group target table, and ranked by a
        per-group row_number — a spilling sort, exact for a target cell
        of any size.
 
-    ``binned`` must carry ``price_per_unit`` and its log bin ``b``;
-    ``attach(df)`` adds the group-key columns (dimension joins) and is
-    called once per pass.  Ties cannot straddle a bin (equal values
-    share a bin), so the selected VALUE equals the row_number
-    formulation's.  A NULL or non-positive price_per_unit (e.g. a zero
-    or negative l_quantity) lands in the NULL bin and raises
+    ``keys`` starts with ``"city"``; ``_dims`` attaches the key columns
+    once per pass.  Ties cannot straddle a bin (equal values share a
+    bin), so the selected VALUE equals the row_number formulation's.
+    A NULL or non-positive price_per_unit (e.g. a zero or negative
+    l_quantity) in a reported group lands in the NULL bin and raises
     ``_locate``'s ValueError instead of giving a wrong median.
     """
-    full = attach(binned).select(*keys, "price_per_unit", "b")
+    binned = cleaned.withColumn("b", _log_bin("price_per_unit", _GM_BIN_SCALE))
+    full = _dims(ctx, binned, set(keys)).select(*keys, "price_per_unit", "b")
     meta = full.groupBy(*keys, "b").count().toArrow()
     cells: dict[tuple, dict[int, int]] = {}
     bin_total: dict[int, int] = {}
+    city_total: dict[str | None, int] = {}
     for *g, b, c in zip(*(arr.to_pylist() for arr in meta.columns)):
         cells.setdefault(tuple(g), {})[b] = c
         bin_total[b] = bin_total.get(b, 0) + c
+        city_total[g[0]] = city_total.get(g[0], 0) + c
+    ranked = sorted(city_total, key=lambda c: (-city_total[c], c is None, c))
+    top = set(ranked[:_TOP_CITIES]) - {None}
     tgt_rows = []
     for g, counts in cells.items():
-        n = sum(counts.values())
-        ((tb, rk),) = _locate(counts, [(n + 1) // 2]).values()
-        tgt_rows.append(g + (tb, rk, n))
+        if g[0] in top:
+            n = sum(counts.values())
+            ((tb, rk),) = _locate(counts, [(n + 1) // 2]).values()
+            tgt_rows.append(g + (tb, rk, n))
     bins = sorted({r[len(keys)] for r in tgt_rows})
     # exact pull-pass row count, known from the metadata: the scan
     # filter keeps every row whose bin is in the UNION of target bins
@@ -442,8 +457,8 @@ def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
         + [T.StructField(c, T.LongType()) for c in ("tb", "rk", "n_listings")])
     tgt = ctx.spark.createDataFrame(tgt_rows, tgt_schema)
 
-    cand = attach(binned.where(F.col("b").isin(bins)),
-                  small_fact=n_cand <= _CAND_BROADCAST_ROWS) \
+    cand = _dims(ctx, binned.where(F.col("b").isin(bins)), set(keys),
+                 small_fact=n_cand <= _CAND_BROADCAST_ROWS) \
         .select(*keys, "price_per_unit", "b")
     cond = [cand[k] == tgt[f"__{k}"] for k in keys]
     cond.append(cand["b"] == tgt["tb"])
@@ -455,43 +470,23 @@ def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
                         F.col("price_per_unit").alias("median_ppu")))
 
 
-def _binned_cleaned(ctx: _Ctx) -> DataFrame:
-    """Cleaned lineitem with the price_per_unit log bin attached (the
-    cutoffs are resolved once here and shared by both median passes)."""
-    return (_cleaned_lineitem(ctx)
-            .withColumn("b", _log_bin("price_per_unit", _GM_BIN_SCALE)))
-
-
 def city_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference test.py: top-20 cities by listing count with the
-    median price-per-unit (ties broken by city name)."""
+    """Reference test.py: the top-20 cities by listing count (ties
+    broken by city name) with the median price-per-unit; the top 20
+    are chosen on the driver from the median metadata."""
     ctx = _Ctx(spark, sf_dir)
-    binned = _binned_cleaned(ctx)
-    med = _grouped_median(
-        ctx, binned, ["city"],
-        lambda df, small_fact=False: _dims(ctx, df, {"city"}, small_fact))
-    return (med.orderBy(F.desc("n_listings"), "city").limit(20)
-               .select("city", "n_listings", "median_ppu"))
+    return _grouped_median(ctx, _cleaned_lineitem(ctx), ["city"])
 
 
 def district_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference test.py: per-district medians inside the top-20 cities.
 
-    The top-20 city filter is a rank over the ~125 aggregated rows
-    (city count = sum of its district counts — exact integers).
+    A city's total is the exact integer sum of its district counts, so
+    the top 20 are chosen on the driver from the median metadata, with
+    no rank window over the aggregated rows.
     """
     ctx = _Ctx(spark, sf_dir)
-    binned = _binned_cleaned(ctx)
-    med = _grouped_median(
-        ctx, binned, ["city", "district"],
-        lambda df, small_fact=False: _dims(ctx, df, {"city", "district"},
-                                           small_fact))
-    w_city = Window.partitionBy("city")
-    w_rank = Window.orderBy(F.desc("city_total"), "city")
-    return (med.withColumn("city_total", F.sum("n_listings").over(w_city))
-               .withColumn("city_rank", F.dense_rank().over(w_rank))
-               .where(F.col("city_rank") <= 20)
-               .select("city", "district", "n_listings", "median_ppu"))
+    return _grouped_median(ctx, _cleaned_lineitem(ctx), ["city", "district"])
 
 
 def avg_price_by_rooms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,8 +577,10 @@ def price_area_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(x * x).cast("double").alias("sxx"),
     )
     nd = F.col("n").cast("double")
-    slope = (nd * F.col("sxy") - F.col("sx") * F.col("sy")) / \
-            (nd * F.col("sxx") - F.col("sx") * F.col("sx"))
+    # try_divide: all-equal areas give 0/0, which the oracle reports as
+    # a NULL slope (ANSI mode would raise DIVIDE_BY_ZERO)
+    slope = F.try_divide(nd * F.col("sxy") - F.col("sx") * F.col("sy"),
+                         nd * F.col("sxx") - F.col("sx") * F.col("sx"))
     return agg.select(
         "n",
         slope.alias("slope"),
@@ -598,8 +595,10 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = _cleaned_lineitem(_Ctx(spark, sf_dir)).select("price")
     stats = cl.agg(F.min("price").alias("mn"), F.max("price").alias("mx"))
     width = (F.col("mx") - F.col("mn")) / F.lit(40.0)
-    bin_ = F.least(F.floor((F.col("price") - F.col("mn")) / width), F.lit(39)) \
-            .cast("int").alias("bin")
+    # all-equal prices give width 0: try_divide's NULL makes least()
+    # pick bin 39, as the oracle's NULL division does
+    bin_ = F.least(F.floor(F.try_divide(F.col("price") - F.col("mn"), width)),
+                   F.lit(39)).cast("int").alias("bin")
     return (cl.crossJoin(F.broadcast(stats))
               .select(bin_, "mn", "mx")
               .groupBy("bin", "mn", "mx")

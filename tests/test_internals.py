@@ -132,89 +132,134 @@ def naive_median_counts(df, keys):
                       F.col("price_per_unit").alias("median_ppu")))
 
 
-def test_grouped_median_matches_window(spark):
+def identity_dims(monkeypatch):
+    """Make _grouped_median read its key columns straight from the
+    synthetic input instead of joining the dimension tables."""
+    import rental_engine.queries as Q
+    monkeypatch.setattr(Q, "_dims", lambda ctx, df, need, small_fact=False: df)
+
+
+def test_grouped_median_matches_window(spark, monkeypatch):
     """The grouped binned rank search must reproduce the per-group
-    row_number median bit-for-bit, on real data and on a synthetic
-    set with duplicate values and odd/even group sizes."""
-    from rental_engine.queries import (_Ctx, _binned_cleaned, _dims,
-                                       _grouped_median, _log_bin)
+    row_number median bit-for-bit, on real data (restricted to the
+    top 20 cities, ordered as the oracle orders them) and on a
+    synthetic set with duplicate values and odd/even group sizes."""
+    from rental_engine.queries import (_Ctx, _cleaned_lineitem, _dims,
+                                       _grouped_median)
     for sf in (SF_SMALL, SF_MED):
         ctx = _Ctx(spark, sf)
-        binned = _binned_cleaned(ctx)
-        cl = _dims(ctx, binned, {"city", "district"})
+        cleaned = _cleaned_lineitem(ctx)
+        cl = _dims(ctx, cleaned, {"city", "district"})
+        top = (cl.groupBy("city").count()
+                 .orderBy(F.desc("count"), F.asc_nulls_last("city")).limit(20)
+                 .select("city"))
         for keys in (["city"], ["city", "district"]):
-            need = set(keys)
-            got = sorted(map(tuple, _grouped_median(
-                ctx, binned, keys,
-                lambda df, small_fact=False: _dims(ctx, df, need,
-                                                   small_fact)).collect()))
-            want = sorted(map(tuple, naive_median_counts(cl, keys).collect()))
+            got = sorted(map(tuple, _grouped_median(ctx, cleaned, keys).collect()))
+            want = sorted(map(tuple, naive_median_counts(cl, keys)
+                              .join(top, "city").select(*keys, "n_listings",
+                                                        "median_ppu").collect()))
             assert got == want, f"{sf} {keys}"
     # synthetic: duplicates, ties at the median, even/odd sizes
+    identity_dims(monkeypatch)
     syn = spark.createDataFrame(
         [("a", 1.0), ("a", 1.0), ("a", 2.0), ("a", 7.5),       # even, tie at median
          ("b", 3.0),                                            # singleton
          ("c", 5.0), ("c", 5.0), ("c", 5.0), ("c", 9.0), ("c", 0.5)],
-        ["g", "price_per_unit"]).withColumn("b", _log_bin("price_per_unit"))
+        ["city", "price_per_unit"])
     got = sorted(map(tuple, _grouped_median(
-        _Ctx(spark, SF_SMALL), syn, ["g"],
-        lambda df, small_fact=False: df).collect()))
-    want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
+        _Ctx(spark, SF_SMALL), syn, ["city"]).collect()))
+    want = sorted(map(tuple, naive_median_counts(syn, ["city"]).collect()))
     assert got == want and got == [("a", 4, 1.0), ("b", 1, 3.0), ("c", 5, 5.0)]
 
 
-def test_grouped_median_dense_cell_path(spark):
+def test_top_cities_follow_oracle_order(spark, monkeypatch):
+    """The top-20 city rule is the oracle's ORDER BY n_listings DESC,
+    city LIMIT 20: a count tie goes to the smaller name, a NULL city
+    sorts last among its count and, when it reaches the top 20, takes
+    its place and is dropped."""
+    from rental_engine.queries import _Ctx, _grouped_median
+    identity_dims(monkeypatch)
+    cities = [f"c{i:02d}" for i in range(19)]
+    base = [(c, float(v)) for c in cities for v in range(1, 6)]
+    ties = [(c, float(v)) for c in ("tie_b", "tie_a") for v in range(1, 4)]
+
+    def top(null_rows):
+        syn = spark.createDataFrame(
+            base + ties + [(None, 1.0)] * null_rows,
+            "city string, price_per_unit double")
+        return sorted(map(tuple, _grouped_median(
+            _Ctx(spark, SF_SMALL), syn, ["city"]).collect()))
+
+    kept = [(c, 5, 3.0) for c in cities]
+    assert top(3) == kept + [("tie_a", 3, 2.0)]
+    assert top(4) == kept
+
+
+def test_grouped_median_plans_have_no_single_partition(spark):
+    """Both median queries pick their top 20 cities on the driver: the
+    plan keeps only the per-group median window, with no global sort,
+    limit or rank window over the aggregated groups."""
+    from rental_engine.queries import city_stats, district_stats
+
+    def plan(q):
+        return q(spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
+
+    district, city = plan(district_stats), plan(city_stats)
+    assert district.count("Window [") == 1, district
+    assert "SinglePartition" not in district, district
+    assert "TakeOrderedAndProject" not in city, city
+    assert "SinglePartition" not in city, city
+
+
+def test_grouped_median_dense_cell_path(spark, monkeypatch):
     """A (group, bin) cell holding a whole group is ranked by the pull
     pass's per-group sort and gives the window answer; three such
     cells run no more jobs than one."""
-    from rental_engine.queries import _Ctx, _grouped_median, _log_bin
+    from rental_engine.queries import _Ctx, _grouped_median
+    identity_dims(monkeypatch)
 
     def median(syn, group):
         return job_count(spark, group, lambda: sorted(map(tuple, _grouped_median(
-            _Ctx(spark, SF_SMALL), syn, ["g"],
-            lambda df, small_fact=False: df).collect())))
+            _Ctx(spark, SF_SMALL), syn, ["city"]).collect())))
 
     syn = (spark.range(3001)
-           .selectExpr("CASE WHEN id < 3000 THEN 'dense' ELSE 'tiny' END AS g",
+           .selectExpr("CASE WHEN id < 3000 THEN 'dense' ELSE 'tiny' END AS city",
                        "CASE WHEN id < 3000 THEN 5.0 + (id % 3) * 1e-9 "
-                       "ELSE 42.0 END AS price_per_unit")
-           .withColumn("b", _log_bin("price_per_unit")))
+                       "ELSE 42.0 END AS price_per_unit"))
     got, one_jobs = median(syn, "dense-one")
-    want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
+    want = sorted(map(tuple, naive_median_counts(syn, ["city"]).collect()))
     assert got == want
     assert got == [("dense", 3000, 5.0 + 1e-9), ("tiny", 1, 42.0)]
 
     syn3 = (spark.range(9001)
             .selectExpr("CASE WHEN id < 9000 THEN concat('dense', id DIV 3000) "
-                        "ELSE 'tiny' END AS g",
+                        "ELSE 'tiny' END AS city",
                         "CASE WHEN id < 9000 THEN 5.0 * (1 + id DIV 3000) "
-                        "+ (id % 3) * 1e-9 ELSE 42.0 END AS price_per_unit")
-            .withColumn("b", _log_bin("price_per_unit")))
+                        "+ (id % 3) * 1e-9 ELSE 42.0 END AS price_per_unit"))
     got3, three_jobs = median(syn3, "dense-three")
-    want3 = sorted(map(tuple, naive_median_counts(syn3, ["g"]).collect()))
+    want3 = sorted(map(tuple, naive_median_counts(syn3, ["city"]).collect()))
     assert got3 == want3
     assert got3 == [("dense0", 3000, 5.0 + 1e-9), ("dense1", 3000, 10.0 + 1e-9),
                     ("dense2", 3000, 15.0 + 1e-9), ("tiny", 1, 42.0)]
     assert 0 < three_jobs <= one_jobs, (three_jobs, one_jobs)
 
 
-def test_grouped_median_null_bin_raises_named_error(spark):
-    """A NULL or non-positive price_per_unit falls in the NULL log bin,
-    where no single rank position matches the oracle's ORDER BY (NULLs
-    last, negatives first): a named ValueError, not a wrong median, an
-    empty answer or a TypeError."""
+def test_grouped_median_null_bin_raises_named_error(spark, monkeypatch):
+    """A NULL or non-positive price_per_unit in a reported city falls
+    in the NULL log bin, where no single rank position matches the
+    oracle's ORDER BY (NULLs last, negatives first): a named
+    ValueError, not a wrong median, an empty answer or a TypeError."""
     import pytest
-    from rental_engine.queries import _Ctx, _grouped_median, _log_bin
+    from rental_engine.queries import _Ctx, _grouped_median
+    identity_dims(monkeypatch)
     cases = [[("a", None), ("a", 1.0), ("a", 2.0)],
              [("a", -1.0), ("a", -2.0), ("a", 3.0)],
              [("a", -1.0), ("a", -2.0), ("a", 3.0), ("b", 2.0)],
              [("a", -1.0), ("a", 3.0), ("a", 4.0)]]
     for rows in cases:
-        syn = (spark.createDataFrame(rows, "g string, price_per_unit double")
-               .withColumn("b", _log_bin("price_per_unit")))
+        syn = spark.createDataFrame(rows, "city string, price_per_unit double")
         with pytest.raises(ValueError, match="positive, non-NULL"):
-            _grouped_median(_Ctx(spark, SF_SMALL), syn, ["g"],
-                            lambda df, small_fact=False: df).collect()
+            _grouped_median(_Ctx(spark, SF_SMALL), syn, ["city"]).collect()
 
 
 def test_region_preagg_matches_direct(spark):
